@@ -128,9 +128,7 @@ def mutual_information_binned(
     mm = df.agg(
         *[F.min(c).alias(f"{c}__mn") for c in feature_cols],
         *[F.max(c).alias(f"{c}__mx") for c in feature_cols],
-        F.count(F.lit(1)).alias("__n"),
     ).first()
-    n = mm["__n"]
     scores: dict = {}
     binnable = []
     bin_structs = []
@@ -140,13 +138,14 @@ def mutual_information_binned(
             scores[c] = 0.0
             continue
         width = (mx - mn) / bins
-        bin_col = F.least(
-            F.floor((F.col(c) - F.lit(mn)) / F.lit(width)), F.lit(bins - 1)
+        # least() skips NULLs, so the isNotNull guard is what maps a NULL
+        # feature value to a NULL bin; the post-explode bin filter then
+        # drops those rows from that feature's contingency table
+        bin_col = F.when(
+            F.col(c).isNotNull(),
+            F.least(F.floor((F.col(c) - F.lit(mn)) / F.lit(width)), F.lit(bins - 1)),
         )
         binnable.append(c)
-        # NULL feature value -> NULL bin (the literals are non-null), so
-        # the post-explode bin filter reproduces the old per-feature
-        # isNotNull row filter exactly
         bin_structs.append(
             F.struct(F.lit(c).alias("__c"), bin_col.alias("__bin"))
         )
@@ -165,6 +164,8 @@ def mutual_information_binned(
         for r in counts:
             by_feature[r["__c"]].append(r)
         for c in binnable:
+            # probabilities over the rows where the feature is observed
+            n = sum(r["count"] for r in by_feature[c])
             pxy = {(r["__bin"], r["__y"]): r["count"] / n for r in by_feature[c]}
             px, py = defaultdict(float), defaultdict(float)
             for (bx, y), p in pxy.items():

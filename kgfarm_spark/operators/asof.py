@@ -16,18 +16,14 @@ Two result modes:
   row with ``r.ts ∈ [l.ts - tolerance, l.ts]`` (the reference keeps ties,
   strict ``<`` at api.py:551). A plain equi+range join.
 
-Two physical strategies for ``latest``:
-
-- ``'union_window'`` (default): tag both sides, union, one shuffle on the
-  key, then ``last(value, ignorenulls)`` over an ordered window carries the
-  most recent right payload onto each left row. Cost: ONE shuffle of
-  |L|+|R| rows, no fan-out, no join explosion — robust when a single left
-  timestamp matches thousands of right rows. This is the 100 TB path: it
-  shuffles each input exactly once on the conversation key (the same
-  partitioning downstream window features need, so the exchange is reused).
-- ``'merge_asof'``: cogrouped ``applyInPandas`` running ``pd.merge_asof``
-  per key bucket — Arrow-vectorized; useful when both sides are already
-  bucketed by the key and per-key data fits a pandas batch.
+``latest`` runs on the union-carry kernel (operators/carry.py): tag both
+sides, union, one shuffle on the key, then ``last(payload, ignorenulls)``
+over an ordered window carries the most recent right payload onto each
+left row. Cost: ONE shuffle of |L|+|R| rows, no fan-out, no join
+explosion — robust when a single left timestamp matches thousands of
+right rows. This is the 100 TB path: it shuffles each input exactly once
+on the conversation key (the same partitioning downstream window features
+need, so the exchange is reused).
 
 Tie semantics (deterministic, oracle-checked): among right rows sharing the
 match timestamp, both directions take the greatest ``tiebreak`` value;
@@ -41,15 +37,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _tolerance_expr(tolerance: str | None) -> str | None:
-    """Normalize a tolerance spec like '10 days' / '1 hour' to INTERVAL SQL."""
-    if tolerance is None:
-        return None
-    return f"INTERVAL {tolerance}"
+from kgfarm_spark.operators.carry import probe_reduce, q, union_carry
 
 
 def asof_join(
@@ -63,7 +54,6 @@ def asof_join(
     mode: str = "latest",
     right_cols: Sequence[str] | None = None,
     tiebreak: str | None = None,
-    strategy: str = "union_window",
     probe_pushdown: bool = False,
 ) -> DataFrame:
     """As-of join ``left`` (entity frame) against ``right`` (feature view).
@@ -81,7 +71,6 @@ def asof_join(
             non-ts columns). The matched right timestamp is always emitted
             as ``matched_ts``.
         tiebreak: right column ordering equal-ts matches (e.g. 'turn_idx').
-        strategy: 'union_window' | 'merge_asof' (latest mode only).
         probe_pushdown: broadcast the left frame's distinct key set and
             left-semi reduce the right side BEFORE the join/window
             shuffle. Exactness-preserving for every mode/direction (an
@@ -91,29 +80,32 @@ def asof_join(
             measured 9.5× and the when-not-to note.
     """
     keys = [on] if isinstance(on, str) else list(on)
-    if probe_pushdown:
-        right = right.join(F.broadcast(left.select(*keys).distinct()), keys, "left_semi")
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in keys and c != right_ts]
     right_cols = list(right_cols)
 
     if mode == "all_in_window":
+        if probe_pushdown:
+            right = probe_reduce(right, left, keys)
         return _interval_join(left, right, keys, left_ts, right_ts, tolerance, right_cols)
     if mode != "latest":
         raise ValueError(f"unknown mode: {mode!r}")
 
-    if strategy == "merge_asof":
-        return _merge_asof_strategy(
-            left, right, keys, left_ts, right_ts, direction, tolerance, right_cols
-        )
-    if strategy != "union_window":
-        raise ValueError(f"unknown strategy: {strategy!r}")
-
-    if direction == "nearest":
-        return _union_window_nearest(
-            left, right, keys, left_ts, right_ts, tolerance, right_cols, tiebreak
-        )
-    return _union_window(left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak)
+    payload = ", ".join([f"{q(right_ts)} AS matched_ts", *map(q, right_cols)])
+    return union_carry(
+        right,
+        left,
+        keys,
+        right_ts,
+        left_ts,
+        [("__match", "last", f"struct({payload})")],
+        match="__match.matched_ts",
+        emit=[f"__match.{c}" for c in ["matched_ts", *right_cols]],
+        direction=direction,
+        tiebreak=tiebreak,
+        tolerance=tolerance,
+        probe_pushdown=probe_pushdown,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -138,202 +130,6 @@ def _interval_join(left, right, keys, left_ts, right_ts, tolerance, right_cols):
         cond = cond & (F.col(k) == F.col(f"__r_{k}"))
     cond = cond & (F.col("matched_ts") <= F.col(left_ts))
     if tolerance is not None:
-        cond = cond & (
-            F.col("matched_ts") >= F.col(left_ts) - F.expr(_tolerance_expr(tolerance))
-        )
+        cond = cond & (F.col("matched_ts") >= F.col(left_ts) - F.expr(f"INTERVAL {tolerance}"))
     out = left.join(r, cond, "inner")
     return out.drop(*[f"__r_{k}" for k in keys])
-
-
-# ---------------------------------------------------------------------------
-# latest via union + window (one shuffle, fan-out safe)
-# ---------------------------------------------------------------------------
-
-
-def _union_window(left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak):
-    # selectExpr: the whole projection crosses py4j once and parses
-    # JVM-side — the per-column Column form cost hundreds of round-trips
-    # per query construction (guide §1: the profile showed construction,
-    # not executors). Identical Catalyst expressions.
-    ltypes = {c: left.schema[c].dataType.simpleString() for c in left.columns}
-    payload_sql = "struct(`" + right_ts + "` AS matched_ts" + "".join(
-        f", `{c}`" for c in right_cols
-    ) + ")"
-    r_side = right.selectExpr(
-        *[f"`{k}`" for k in keys],
-        f"`{right_ts}` AS __ts",
-        "0 AS __side",
-        (f"CAST(`{tiebreak}` AS BIGINT) AS __tb" if tiebreak else "CAST(0 AS BIGINT) AS __tb"),
-        f"{payload_sql} AS __payload",
-        *[f"CAST(NULL AS {ltypes[c]}) AS `__l_{c}`" for c in left.columns],
-    )
-    ptype = r_side.schema["__payload"].dataType.simpleString()
-    l_side = left.selectExpr(
-        *[f"`{k}`" for k in keys],
-        f"`{left_ts}` AS __ts",
-        "1 AS __side",
-        "CAST(NULL AS BIGINT) AS __tb",
-        f"CAST(NULL AS {ptype}) AS __payload",
-        *[f"`{c}` AS `__l_{c}`" for c in left.columns],
-    )
-    u = r_side.unionByName(l_side)
-
-    if direction == "backward":
-        # rows ordered by time; at equal ts right rows (side 0) precede the
-        # left row so the inclusive match is picked; among equal-ts right
-        # rows the LAST seen (max tiebreak) wins.
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("__ts").asc(), F.col("__side").asc(), F.col("__tb").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    elif direction == "forward":
-        # reverse traversal; max tiebreak wins among equal-ts right rows
-        # (same tie rule as backward → oracle ORDER BY ts ASC, tb DESC).
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("__ts").desc(), F.col("__side").asc(), F.col("__tb").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    else:
-        raise ValueError(f"unknown direction: {direction!r}")
-
-    carried = u.withColumn("__match", F.last("__payload", ignorenulls=True).over(w))
-    out = carried.filter(F.col("__side") == 1)
-
-    match = "__match"
-    if tolerance is not None:
-        tol = _tolerance_expr(tolerance)
-        if direction == "backward":
-            in_tol = f"__match.matched_ts >= __ts - {tol}"
-        else:
-            in_tol = f"__match.matched_ts <= __ts + {tol}"
-        match = f"(CASE WHEN {in_tol} THEN __match END)"
-
-    return out.selectExpr(
-        *[f"`__l_{c}` AS `{c}`" for c in left.columns],
-        f"{match}.matched_ts AS matched_ts",
-        *[f"{match}.`{c}` AS `{c}`" for c in right_cols],
-    )
-
-
-def _union_window_nearest(left, right, keys, left_ts, right_ts, tolerance, right_cols, tiebreak):
-    """direction='nearest' in ONE shuffle: both sides union once, the
-    backward match (last payload over ts-asc traversal) and the forward
-    match (last payload over ts-desc traversal) are computed as two window
-    columns over the same exchange — the hash partitioning on the key is
-    shared, only the intra-partition sort runs twice. Replaces the old
-    two-union + rejoin plan (3 exchanges → 1).
-
-    Closer match wins; backward preferred on equal distance
-    (deterministic, oracle-checked)."""
-    payload = F.struct(
-        F.col(right_ts).alias("matched_ts"), *[F.col(c) for c in right_cols]
-    )
-    r_side = right.select(
-        *keys,
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__side"),
-        (F.col(tiebreak) if tiebreak else F.lit(0)).cast("long").alias("__tb"),
-        payload.alias("__payload"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(f"__l_{c}") for c in left.columns],
-    )
-    l_side = left.select(
-        *keys,
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        F.lit(None).cast("long").alias("__tb"),
-        F.lit(None).cast(r_side.schema["__payload"].dataType).alias("__payload"),
-        *[F.col(c).alias(f"__l_{c}") for c in left.columns],
-    )
-    u = r_side.unionByName(l_side)
-
-    # same tie rules as the single-direction paths: at equal ts the right
-    # row is visible to the left row in BOTH traversals (side 0 sorts
-    # first), and among equal-ts rights max tiebreak wins
-    w_back = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__ts").asc(), F.col("__side").asc(), F.col("__tb").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_fwd = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__ts").desc(), F.col("__side").asc(), F.col("__tb").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = u.select(
-        "*",
-        F.last("__payload", ignorenulls=True).over(w_back).alias("__b"),
-        F.last("__payload", ignorenulls=True).over(w_fwd).alias("__f"),
-    )
-    out = carried.filter(F.col("__side") == 1)
-
-    b, f_ = F.col("__b"), F.col("__f")
-    if tolerance is not None:
-        tol = F.expr(_tolerance_expr(tolerance))
-        b = F.when(b["matched_ts"] >= F.col("__ts") - tol, b)
-        f_ = F.when(f_["matched_ts"] <= F.col("__ts") + tol, f_)
-
-    def _secs(c: Column) -> Column:
-        # timestamp_ntz cannot cast straight to double in Spark 4; route via
-        # ltz (session TZ pinned to UTC in session.py — deterministic).
-        return c.cast("timestamp").cast("double")
-
-    bdist = _secs(F.col("__ts")) - _secs(b["matched_ts"])
-    fdist = _secs(f_["matched_ts"]) - _secs(F.col("__ts"))
-    use_back = f_["matched_ts"].isNull() | (
-        b["matched_ts"].isNotNull() & (bdist <= fdist)
-    )
-    match = F.when(use_back, b).otherwise(f_)
-    return out.select(
-        *[F.col(f"__l_{c}").alias(c) for c in left.columns],
-        match["matched_ts"].alias("matched_ts"),
-        *[match[c].alias(c) for c in right_cols],
-    )
-
-
-# ---------------------------------------------------------------------------
-# latest via cogrouped pd.merge_asof (Arrow path)
-# ---------------------------------------------------------------------------
-
-
-def _merge_asof_strategy(left, right, keys, left_ts, right_ts, direction, tolerance, right_cols):
-    import pandas as pd  # local import: executors only
-
-    out_schema_fields = []
-    for c in left.columns:
-        out_schema_fields.append(f"`{c}` {left.schema[c].dataType.simpleString()}")
-    out_schema_fields.append("`matched_ts` timestamp")
-    for c in right_cols:
-        out_schema_fields.append(f"`{c}` {right.schema[c].dataType.simpleString()}")
-    out_schema = ", ".join(out_schema_fields)
-
-    tol_td = pd.Timedelta(tolerance) if tolerance is not None else None
-    l_cols = list(left.columns)
-
-    def merge(l_pdf: "pd.DataFrame", r_pdf: "pd.DataFrame") -> "pd.DataFrame":
-        l_pdf = l_pdf.sort_values(left_ts, kind="mergesort")
-        if r_pdf.empty:
-            out = l_pdf.copy()
-            out["matched_ts"] = pd.NaT
-            for c in right_cols:
-                out[c] = None
-            return out[l_cols + ["matched_ts"] + list(right_cols)]
-        r_pdf = r_pdf[[right_ts] + list(right_cols)].sort_values(right_ts, kind="mergesort")
-        r_pdf = r_pdf.rename(columns={right_ts: "matched_ts"})
-        out = pd.merge_asof(
-            l_pdf,
-            r_pdf,
-            left_on=left_ts,
-            right_on="matched_ts",
-            direction=direction,
-            tolerance=tol_td,
-            allow_exact_matches=True,
-        )
-        return out[l_cols + ["matched_ts"] + list(right_cols)]
-
-    return (
-        left.groupBy(*keys)
-        .cogroup(right.groupBy(*keys))
-        .applyInPandas(merge, schema=out_schema)
-    )

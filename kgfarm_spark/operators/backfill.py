@@ -30,355 +30,22 @@ Hot-conversation guard (``hot_conv_turns``): a per-key window puts each
 conversation in ONE task. For transcripts that is normally fine (a
 conversation is bounded by its length), but a pathological multi-million
 -turn conversation becomes a straggler. When ``hot_conv_turns`` is set,
-conversations whose unioned row count meets the threshold are split into
-event-time range buckets against their own quantile boundaries and the
-cumulative window partitions by (key, bucket) with an exclusive prefix
-carry (every cumulative feature here is a prefix of an associative
-aggregate, so the decomposition is exact — pytest-pinned). Cold keys take
-bucket 0 and zero carries, so hot and cold share ONE window pass; the
-guard costs two extra passes over the union (per-key stats, hot-slice
-partials), both with tiny broadcastable outputs. Per-task rows for a hot
-conversation drop to ~|conv| / n_hot_buckets.
+the kernel's bucket+carry guard (operators/carry.py) splits conversations
+whose unioned row count meets the threshold into event-time buckets with
+an exclusive prefix carry (every cumulative feature here is a prefix of
+an associative aggregate, so the decomposition is exact — pytest-pinned).
+Cold keys take bucket 0 and no carry, so hot and cold share ONE window
+pass; the guard costs two extra passes over the union (per-key stats,
+hot-slice partials), both with tiny broadcastable outputs. Per-task rows
+for a hot conversation drop to ~|conv| / n_hot_buckets.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from kgfarm_spark.operators.asof import _tolerance_expr
-
-#: feature columns produced by the fused state pass (defines the output
-#: projection order)
-_FEATURES = [
-    "matched_ts",
-    "turns_so_far",
-    "tool_calls_so_far",
-    "text_len_sum",
-    "text_len_avg",
-    "text_len_max",
-    "user_turns_so_far",
-    "assistant_turns_so_far",
-]
-
-
-def _union_frame(
-    transcripts: DataFrame,
-    probes: DataFrame,
-    key: str,
-    ts: str,
-    probe_ts: str,
-    probe_cols: list[str],
-) -> DataFrame:
-    """Union probes into the transcript stream on the (key, ts) axis.
-    Turns sort before probes at equal ts (__side 0 < 1 → inclusive
-    backward semantics); ``text`` is projected to its length BEFORE the
-    shuffle.
-
-    Built with ``selectExpr`` (whole projection parsed JVM-side in one
-    round-trip): the per-column ``F.*`` form cost a few hundred py4j
-    round-trips per construction, a measurable slice of the per-query
-    wall at interactive scale (guide §1: measure — construction showed
-    up in the profile, not the executors). The parsed expressions are
-    identical Catalyst nodes."""
-    ptypes = {c: probes.schema[c].dataType.simpleString() for c in probe_cols}
-    turn_side = transcripts.selectExpr(
-        f"`{key}`",
-        f"`{ts}` AS __ts",
-        "0 AS __side",  # turns sort before probes at equal ts
-        "CAST(turn_idx AS BIGINT) AS __tb",
-        "true AS __is_turn",
-        "CAST(length(text) AS BIGINT) AS __text_len",
-        "(tool IS NOT NULL) AS __has_tool",
-        "(role = 'user') AS __is_user",
-        "(role = 'assistant') AS __is_assistant",
-        *[f"CAST(NULL AS {ptypes[c]}) AS `__p_{c}`" for c in probe_cols],
-    )
-    probe_side = probes.selectExpr(
-        f"`{key}`",
-        f"`{probe_ts}` AS __ts",
-        "1 AS __side",
-        "CAST(NULL AS BIGINT) AS __tb",
-        "false AS __is_turn",
-        "CAST(NULL AS BIGINT) AS __text_len",
-        "CAST(NULL AS BOOLEAN) AS __has_tool",
-        "CAST(NULL AS BOOLEAN) AS __is_user",
-        "CAST(NULL AS BOOLEAN) AS __is_assistant",
-        *[f"`{c}` AS `__p_{c}`" for c in probe_cols],
-    )
-    return turn_side.unionByName(probe_side)
-
-
-def _fused_state(u: DataFrame, key: str) -> DataFrame:
-    """Cumulative feature state over the unioned stream: ONE window
-    partitioned by ``key`` ordered (ts, side, turn).
-
-    ONE selectExpr so Catalyst emits a single Window operator for all
-    eight expressions (chained withColumn + scalar wrappers like
-    coalesce interleave Projects between Window nodes, which blocks the
-    CollapseWindow rule → 8 sequential window passes instead of 1), and
-    the whole projection crosses py4j once (construction cost — see
-    ``_union_frame``)."""
-    ww = (
-        f"OVER (PARTITION BY `{key}` ORDER BY __ts ASC, __side ASC, __tb ASC "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-    )
-    return u.selectExpr(
-        "*",
-        f"last(CASE WHEN __is_turn THEN __ts END, true) {ww} AS matched_ts",
-        f"sum(CAST(CASE WHEN __is_turn THEN 1 ELSE 0 END AS BIGINT)) {ww} AS turns_so_far",
-        f"coalesce(sum(CAST(CASE WHEN __has_tool THEN 1 ELSE 0 END AS BIGINT)) {ww}, 0)"
-        " AS tool_calls_so_far",
-        f"sum(CASE WHEN __is_turn THEN __text_len END) {ww} AS text_len_sum",
-        f"avg(CASE WHEN __is_turn THEN __text_len END) {ww} AS text_len_avg",
-        f"max(CASE WHEN __is_turn THEN __text_len END) {ww} AS text_len_max",
-        f"coalesce(sum(CAST(CASE WHEN __is_user THEN 1 ELSE 0 END AS BIGINT)) {ww}, 0)"
-        " AS user_turns_so_far",
-        f"coalesce(sum(CAST(CASE WHEN __is_assistant THEN 1 ELSE 0 END AS BIGINT)) {ww}, 0)"
-        " AS assistant_turns_so_far",
-    )
-
-
-def _hot_bounds(
-    transcripts: DataFrame,
-    key: str,
-    ts: str,
-    hot_conv_turns: int,
-    n_buckets: int,
-    probes: DataFrame | None = None,
-    probe_ts: str | None = None,
-) -> DataFrame:
-    """ONE aggregate pass over (key, ts) — column-pruned at the scan —
-    computing both hot-key detection (UNIONED row count ≥ threshold:
-    probe rows sit in the same window task as the turns, so a key
-    skewed by a huge probe frame is just as much a straggler — review
-    finding) and a per-key FIXED-WIDTH event-time bucket grid (min/max
-    over TRANSCRIPT ts; probe rows outside the span clamp to the edge
-    buckets, which stays exact). Only hot keys survive, so the result
-    is tiny and broadcastable.
-
-    Fixed-width beats quantile boundaries here twice over: the fit is a
-    plain min/max (no percentile sketch merge), and the per-row bucket
-    lookup is pure codegen arithmetic — a quantile-array search is an
-    interpreted higher-order function costing ~µs/row, which at millions
-    of hot rows × three passes dominated the whole guard. Bucket balance
-    now depends on the key's event-time uniformity instead of exact row
-    quantiles; that only affects parallelism, never correctness (any
-    monotone pure-function-of-ts cut gives an exact decomposition)."""
-    tsd = F.col(ts).cast("timestamp").cast("double")
-    rows = transcripts.select(F.col(key), tsd.alias("__tsd"))
-    if probes is not None:
-        # probe rows count toward the straggler threshold but a NULL tsd
-        # keeps them out of the transcript-span min/max
-        rows = rows.unionByName(
-            probes.select(F.col(key), F.lit(None).cast("double").alias("__tsd"))
-        )
-    stats = (
-        rows.groupBy(key)
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.min("__tsd").alias("__lo"),
-            F.max("__tsd").alias("__hi"),
-        )
-        .filter(F.col("__n") >= hot_conv_turns)
-    )
-    width = (F.col("__hi") - F.col("__lo")) / F.lit(float(n_buckets))
-    return stats.select(
-        key,
-        F.col("__lo"),
-        F.when(width > 0, width).alias("__w"),  # degenerate span → bucket 0
-        F.lit(n_buckets).alias("__nb"),
-    )
-
-
-def _bucket_col(tsd):
-    """Clamped fixed-width time slot against the broadcast grid columns
-    (__lo, __w, __nb) — pure codegen arithmetic, monotone in ts, equal ts
-    always shares a bucket. Rows outside the key's turn span clamp to the
-    first/last bucket — still monotone, so still exact."""
-    return F.when(F.col("__w").isNull(), F.lit(0)).otherwise(
-        F.least(
-            F.greatest(F.floor((tsd - F.col("__lo")) / F.col("__w")), F.lit(0)),
-            (F.col("__nb") - 1).cast("long"),
-        ).cast("int")
-    )
-
-
-def _hot_carry(
-    transcripts: DataFrame, key: str, ts: str, hot_bounds: DataFrame
-) -> DataFrame:
-    """Exclusive prefix carry per (hot key, bucket). Computed from the
-    TRANSCRIPTS side only: probe rows contribute zero/null to every
-    cumulative feature, so they cannot change any partial. The inner
-    broadcast join keeps only hot keys; output is exactly |hot keys| ·
-    n_buckets rows — tiny and broadcastable.
-
-    The carry is DENSIFIED to every bucket id 0..n_buckets-1 per hot key
-    (grid from the broadcast bounds, left-joined with the observed
-    partials): a probe can land in a turn-free time bucket of a hot
-    conversation (an activity gap), and that bucket must still inherit
-    the prefix state of all earlier buckets. Without the grid such a
-    probe found no carry row and read zeroed features."""
-    tsd = F.col(ts).cast("timestamp").cast("double")
-    base = transcripts.select(
-        F.col(key),
-        F.col(ts).alias("__t_ts"),
-        F.length("text").cast("long").alias("__tl"),
-        F.col("tool").isNotNull().alias("__ht"),
-        (F.col("role") == "user").alias("__iu"),
-        (F.col("role") == "assistant").alias("__ia"),
-        tsd.alias("__tsd"),
-    )
-    tagged = base.join(F.broadcast(hot_bounds), key).withColumn(
-        "__ob", _bucket_col(F.col("__tsd"))
-    )
-    partials = tagged.groupBy(key, "__ob").agg(
-        F.count(F.lit(1)).cast("long").alias("__pt_turns"),
-        F.sum(F.col("__ht").cast("long")).alias("__pt_tool"),
-        F.sum("__tl").alias("__pt_tls"),
-        F.count("__tl").alias("__pt_tlc"),
-        F.max("__tl").alias("__pt_tlm"),
-        F.sum(F.col("__iu").cast("long")).alias("__pt_user"),
-        F.sum(F.col("__ia").cast("long")).alias("__pt_asst"),
-        F.max("__t_ts").alias("__pt_lastts"),
-    )
-    dense = hot_bounds.select(
-        F.col(key),
-        F.explode(F.sequence(F.lit(0), F.col("__nb") - 1)).alias("__ob"),
-    ).withColumn("__ob", F.col("__ob").cast("int")).join(
-        partials, [key, "__ob"], "left"
-    )
-    wprev = (
-        Window.partitionBy(key).orderBy("__ob").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return dense.select(
-        key,
-        "__ob",
-        F.coalesce(F.sum("__pt_turns").over(wprev), F.lit(0)).alias("__c_turns"),
-        F.coalesce(F.sum("__pt_tool").over(wprev), F.lit(0)).alias("__c_tool"),
-        F.coalesce(F.sum("__pt_tls").over(wprev), F.lit(0)).alias("__c_tls"),
-        F.coalesce(F.sum("__pt_tlc").over(wprev), F.lit(0)).alias("__c_tlc"),
-        F.max("__pt_tlm").over(wprev).alias("__c_tlm"),
-        F.coalesce(F.sum("__pt_user").over(wprev), F.lit(0)).alias("__c_user"),
-        F.coalesce(F.sum("__pt_asst").over(wprev), F.lit(0)).alias("__c_asst"),
-        F.max("__pt_lastts").over(wprev).alias("__c_lastts"),
-    )
-
-
-def _fused_state_guarded(
-    u: DataFrame, key: str, hot_bounds: DataFrame, carry: DataFrame
-) -> DataFrame:
-    """Exact twin of ``_fused_state`` with a hot-key straggler guard —
-    ONE window pass for hot and cold keys alike.
-
-    Hot rows get a fixed-width time-bucket id from their key's broadcast
-    grid (``_hot_bounds``); cold keys get bucket 0. The cumulative window
-    partitions by (key, bucket) — for cold keys that IS the plain per-key
-    window. The per-bucket prefix ``carry`` is broadcast-joined AFTER the
-    window (the shuffle+sort moves only the fixed-width union columns
-    plus one int, not nine carry longs per row) and coalesces to
-    zero/null for cold rows, making the combine expressions collapse to
-    the plain ones. Guard cost over the plain path: one column-pruned
-    (key, ts) stats pass and one transcripts-only partials pass, both
-    with tiny outputs."""
-    tsd = F.col("__ts").cast("timestamp").cast("double")
-    tagged = (
-        u.join(F.broadcast(hot_bounds), key, "left")
-        .withColumn(
-            "__ob",
-            F.when(F.col("__lo").isNull(), F.lit(0)).otherwise(_bucket_col(tsd)),
-        )
-        .drop("__lo", "__w", "__nb")
-    )
-
-    is_turn1 = F.when(F.col("__is_turn"), F.lit(1)).otherwise(F.lit(0)).cast("long")
-    turn_len = F.when(F.col("__is_turn"), F.col("__text_len"))
-    tool1 = F.when(F.col("__has_tool"), 1).otherwise(0).cast("long")
-    user1 = F.when(F.col("__is_user"), 1).otherwise(0).cast("long")
-    asst1 = F.when(F.col("__is_assistant"), 1).otherwise(0).cast("long")
-
-    cum = (
-        Window.partitionBy(key, "__ob")
-        .orderBy(F.col("__ts").asc(), F.col("__side").asc(), F.col("__tb").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # in-bucket cumulatives only — the carry combine happens after
-    inner = tagged.select(
-        "*",
-        F.last(F.when(F.col("__is_turn"), F.col("__ts")), ignorenulls=True)
-        .over(cum)
-        .alias("__i_lastts"),
-        F.sum(is_turn1).over(cum).alias("__i_turns"),
-        F.sum(tool1).over(cum).alias("__i_tool"),
-        F.sum(turn_len).over(cum).alias("__i_tls"),
-        F.count(turn_len).over(cum).alias("__i_tlc"),
-        F.max(turn_len).over(cum).alias("__i_tlm"),
-        F.sum(user1).over(cum).alias("__i_user"),
-        F.sum(asst1).over(cum).alias("__i_asst"),
-    )
-
-    # broadcast carry lookup post-window; cold rows (no carry match) take
-    # zero/null carries → the combine reduces to the plain expressions
-    joined = inner.join(F.broadcast(carry), [key, "__ob"], "left")
-    czero = lambda c: F.coalesce(F.col(c), F.lit(0))  # noqa: E731
-    tlc_total = F.col("__i_tlc") + czero("__c_tlc")
-    tls_total = F.coalesce(F.col("__i_tls"), F.lit(0)) + czero("__c_tls")
-    state = joined.select(
-        "*",
-        F.coalesce(F.col("__i_lastts"), F.col("__c_lastts")).alias("matched_ts"),
-        (F.col("__i_turns") + czero("__c_turns")).alias("turns_so_far"),
-        (F.coalesce(F.col("__i_tool"), F.lit(0)) + czero("__c_tool")).alias(
-            "tool_calls_so_far"
-        ),
-        F.when(tlc_total > 0, tls_total).alias("text_len_sum"),
-        F.when(tlc_total > 0, tls_total / tlc_total).alias("text_len_avg"),
-        F.greatest(F.col("__i_tlm"), F.col("__c_tlm")).alias("text_len_max"),
-        (F.coalesce(F.col("__i_user"), F.lit(0)) + czero("__c_user")).alias(
-            "user_turns_so_far"
-        ),
-        (F.coalesce(F.col("__i_asst"), F.lit(0)) + czero("__c_asst")).alias(
-            "assistant_turns_so_far"
-        ),
-    )
-    return state.select(*u.columns, *_FEATURES)
-
-
-def _auto_hot_threshold(
-    transcripts: DataFrame, key: str, probes: DataFrame | None = None
-) -> int | None:
-    """Decide whether the hot-conversation guard should engage, and at
-    what threshold, from ONE column-pruned aggregate over the key column.
-
-    Crossover rule (measured, BENCH.md §2c): engage once a single
-    conversation holds more than ~1/n_cores of all rows — below that,
-    the plain per-key window's natural parallelism already hides the
-    straggler. What the rule optimizes is the STRAGGLER BOUND (max task
-    time — the cluster-scale metric: BENCH_SKEW.json records the
-    window-stage max task dropping 20.6x → 2.0x at pathological skew),
-    NOT single-box wall time: on a lightly-loaded local[N] box the
-    guard's extra bucket/carry shuffles can exceed what the straggler
-    cost on moderate skew, which is exactly why the threshold stays off
-    (returns None) until one key truly dominates a core's share.
-    Returns the engage threshold ``total_rows / n_cores`` when the
-    largest key meets it, else None (guard off). The extra cost is one
-    count-shuffle whose output is |keys| rows reduced to a single
-    driver row — negligible next to the window job it protects."""
-    sc = transcripts.sparkSession.sparkContext
-    n_cores = max(sc.defaultParallelism, 2)
-    keys = transcripts.select(key)
-    if probes is not None:
-        # the window task holds the UNION of turns and probes per key
-        keys = keys.unionByName(probes.select(key))
-    row = (
-        keys.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .agg(F.max("__n").alias("__mx"), F.sum("__n").alias("__tot"))
-        .first()
-    )
-    if row is None or row["__tot"] is None:
-        return None
-    threshold = max(int(row["__tot"] / n_cores), 2)
-    return threshold if row["__mx"] >= threshold else None
+from kgfarm_spark.operators.carry import q, union_carry
+from kgfarm_spark.operators.windows import BACKFILL_SPECS, TOOL_CALL_RATE
 
 
 def backfill_asof_fused(
@@ -403,7 +70,7 @@ def backfill_asof_fused(
     (see module docstring); everything else stays on the plain
     single-window plan. Pass ``"auto"`` to apply the measured crossover
     rule (engage iff some conversation holds > ~1/n_cores of the rows —
-    see ``_auto_hot_threshold``) instead of hand-tuning.
+    see ``carry._auto_hot_threshold``) instead of hand-tuning.
 
     ``probe_pushdown``: semi-join the transcript side down to the
     probe frame's conversation set BEFORE the union-window shuffle.
@@ -419,49 +86,34 @@ def backfill_asof_fused(
     Leave it off when probes cover most conversations (the semi-join
     then only adds work) or when the probe key set is too large to
     broadcast (>~100M keys)."""
-    if probe_pushdown:
-        keyset = probes.select(key).distinct()
-        transcripts = transcripts.join(F.broadcast(keyset), key, "left_semi")
-    if isinstance(hot_conv_turns, str):
-        if hot_conv_turns != "auto":
-            raise ValueError(
-                f"hot_conv_turns must be an int, None, or 'auto'; got "
-                f"{hot_conv_turns!r}"
-            )
-        hot_conv_turns = _auto_hot_threshold(transcripts, key, probes)
     probe_cols = [c for c in probes.columns if c != key]
-    clash = sorted(set(probe_cols) & (set(_FEATURES) | {"tool_call_rate"}))
+    specs = [("matched_ts", "last", q(ts)), *BACKFILL_SPECS]
+    features = [name for name, _, _ in specs]
+    clash = sorted(set(probe_cols) & {*features, "tool_call_rate"})
     if clash:
         raise ValueError(
             f"probe columns {clash} collide with the backfill feature "
             f"output names — rename them (a silent overwrite here would "
             f"corrupt re-backfilled frames)"
         )
-    u = _union_frame(transcripts, probes, key, ts, probe_ts, probe_cols)
-
-    if hot_conv_turns is None:
-        state = _fused_state(u, key)
-    else:
-        bounds = _hot_bounds(
-            transcripts, key, ts, hot_conv_turns, n_hot_buckets, probes, probe_ts
-        )
-        carry = _hot_carry(transcripts, key, ts, bounds)
-        state = _fused_state_guarded(u, key, bounds, carry)
-
-    out = state.filter(F.col("__side") == 1)
-
-    # tolerance / no-match: null out the feature block exactly like a
-    # missed as-of join (matched_ts outside [probe_ts - tol, probe_ts])
-    tol_expr = _tolerance_expr(tolerance)
-    valid = "(matched_ts IS NOT NULL)"
-    if tol_expr is not None:
-        valid = f"(matched_ts IS NOT NULL AND matched_ts >= __ts - {tol_expr})"
-
-    out = out.selectExpr(
-        f"`{key}`",
-        *[f"`__p_{c}` AS `{c}`" for c in probe_cols],
-        *[f"CASE WHEN {valid} THEN `{c}` END AS `{c}`" for c in _FEATURES],
+    out = union_carry(
+        transcripts,
+        probes,
+        [key],
+        ts,
+        probe_ts,
+        specs,
+        match="matched_ts",
+        tiebreak="turn_idx",
+        tolerance=tolerance,
+        probe_pushdown=probe_pushdown,
+        hot_rows=hot_conv_turns,
+        n_hot_buckets=n_hot_buckets,
     )
-    return out.withColumn(
-        "tool_call_rate", F.col("tool_calls_so_far") / F.col("turns_so_far")
+    # text_len_max stays BIGINT, the fused frame's published type
+    return out.selectExpr(
+        q(key),
+        *map(q, probe_cols),
+        *[f"CAST({q(c)} AS BIGINT) AS {q(c)}" if c == "text_len_max" else q(c) for c in features],
+        TOOL_CALL_RATE,
     )

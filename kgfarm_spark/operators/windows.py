@@ -25,6 +25,12 @@ plain windows by tests/test_hot_conv.py. The cross-conversation shuffle
 uses AQE skew handling (session.py).
 All expressions are JVM-side (whole-stage codegen) — no Python in the
 hot path.
+
+The cumulative backfill features are one spec table, ``BACKFILL_SPECS``
+(output name, aggregate, per-row input). ``backfill_features`` evaluates
+it as running windows, ``backfill_features_bucketed`` through the
+union-carry kernel's partial/carry/combine algebra (operators/carry.py),
+and ``backfill_asof_fused`` through the kernel itself.
 """
 
 from __future__ import annotations
@@ -32,6 +38,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.window import WindowSpec
+
+from kgfarm_spark.operators.carry import (
+    bucket_carry,
+    bucket_combine,
+    bucket_partials,
+    bucket_running,
+    over,
+    q,
+    running,
+)
 
 #: canonical per-conversation ordering (input_hint: stable (conv_id,
 #: turn_idx) ordering; ts is monotone per conv but may tie across convs)
@@ -302,17 +318,21 @@ def role_transitions(
     )
 
 
-_BACKFILL_EMITTED = [
-    "text_len",
-    "turns_so_far",
-    "tool_calls_so_far",
-    "text_len_sum",
-    "text_len_avg",
-    "text_len_max",
-    "user_turns_so_far",
-    "assistant_turns_so_far",
-    "tool_call_rate",
+_TEXT_LEN = "length(text)"
+#: the cumulative backfill features as union-carry specs (operators/
+#: carry.py): (output name, aggregate, per-row input over a transcript)
+BACKFILL_SPECS = [
+    ("turns_so_far", "count", "1"),
+    ("tool_calls_so_far", "sum", "CAST(tool IS NOT NULL AS BIGINT)"),
+    ("text_len_sum", "sum", _TEXT_LEN),
+    ("text_len_avg", "avg", _TEXT_LEN),
+    ("text_len_max", "max", _TEXT_LEN),
+    ("user_turns_so_far", "sum", "CAST(role = 'user' AS BIGINT)"),
+    ("assistant_turns_so_far", "sum", "CAST(role = 'assistant' AS BIGINT)"),
 ]
+#: derived ratio, projected after the window stage
+TOOL_CALL_RATE = "tool_calls_so_far / turns_so_far AS tool_call_rate"
+_BACKFILL_EMITTED = ["text_len", *(name for name, _, _ in BACKFILL_SPECS), "tool_call_rate"]
 
 
 def backfill_features(
@@ -347,24 +367,12 @@ def backfill_features(
         return backfill_features_bucketed(
             df, key=key, ts=ts, order=order, bucket_turns=max_turns_per_task
         )
-    cum = turn_window(key, order).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    text_len = F.length("text")
     # single Window pass (see rolling_aggregates note); the derived
     # tool_call_rate ratio is a scalar projection AFTER the window stage
-    out = df.select(
-        "*",
-        text_len.alias("text_len"),
-        F.count(F.lit(1)).over(cum).cast("long").alias("turns_so_far"),
-        F.sum(F.col("tool").isNotNull().cast("long")).over(cum).alias("tool_calls_so_far"),
-        F.sum(text_len).over(cum).alias("text_len_sum"),
-        F.avg(text_len).over(cum).alias("text_len_avg"),
-        F.max(text_len).over(cum).alias("text_len_max"),
-        F.sum((F.col("role") == "user").cast("long")).over(cum).alias("user_turns_so_far"),
-        F.sum((F.col("role") == "assistant").cast("long")).over(cum).alias("assistant_turns_so_far"),
+    out = df.selectExpr(
+        "*", f"{_TEXT_LEN} AS text_len", *running(BACKFILL_SPECS, over([q(key)], q(order)))
     )
-    return out.withColumn(
-        "tool_call_rate", F.col("tool_calls_so_far") / F.col("turns_so_far")
-    )
+    return out.selectExpr("*", TOOL_CALL_RATE)
 
 
 def backfill_features_bucketed(
@@ -388,9 +396,11 @@ def backfill_features_bucketed(
     back, and run the cumulative window PARTITIONED BY (key, bucket).
     A 10M-turn conversation becomes 10M/B parallel tasks instead of one
     straggler; conversations shorter than B land in a single bucket and
-    take the identical per-key path. Null text is handled exactly like
-    the window twin: sum/avg/max over text_len stay NULL until the first
-    non-null text (separate non-null partial count).
+    take the identical per-key path. The partial, carry and combine
+    expressions come from ``BACKFILL_SPECS`` through the union-carry
+    kernel's algebra (operators/carry.py), so null text is handled exactly
+    like the window twin: sum/avg/max over text_len stay NULL until the
+    first non-null text.
     """
     if bucket_turns < 1:
         raise ValueError(
@@ -400,68 +410,19 @@ def backfill_features_bucketed(
             f"divide-by-zero at action time under ANSI)"
         )
     _check_emitted(df, _BACKFILL_EMITTED, "backfill_features_bucketed")
-    text_len = F.length("text")
-    tagged = df.withColumn(
-        "__ob", F.floor(F.col(order) / F.lit(bucket_turns)).cast("int")
-    )
-    partials = tagged.groupBy(key, "__ob").agg(
-        F.count(F.lit(1)).cast("long").alias("__p_turns"),
-        F.sum(F.col("tool").isNotNull().cast("long")).alias("__p_tool"),
-        F.sum(text_len.cast("long")).alias("__p_tls"),
-        F.count(text_len).alias("__p_tlc"),
-        F.max(text_len).alias("__p_tlm"),
-        F.sum((F.col("role") == "user").cast("long")).alias("__p_user"),
-        F.sum((F.col("role") == "assistant").cast("long")).alias("__p_asst"),
-    )
-    wprev = (
-        Window.partitionBy(key)
-        .orderBy("__ob")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = partials.select(
-        key,
-        "__ob",
-        F.coalesce(F.sum("__p_turns").over(wprev), F.lit(0)).alias("__c_turns"),
-        F.coalesce(F.sum("__p_tool").over(wprev), F.lit(0)).alias("__c_tool"),
-        F.coalesce(F.sum("__p_tls").over(wprev), F.lit(0)).alias("__c_tls"),
-        F.coalesce(F.sum("__p_tlc").over(wprev), F.lit(0)).alias("__c_tlc"),
-        F.max("__p_tlm").over(wprev).alias("__c_tlm"),
-        F.coalesce(F.sum("__p_user").over(wprev), F.lit(0)).alias("__c_user"),
-        F.coalesce(F.sum("__p_asst").over(wprev), F.lit(0)).alias("__c_asst"),
+    tagged = df.selectExpr("*", f"CAST(floor({q(order)} / {int(bucket_turns)}) AS INT) AS __ob")
+    carry = (
+        tagged.groupBy(key, "__ob")
+        .agg(*bucket_partials(BACKFILL_SPECS))
+        .selectExpr(q(key), "__ob", *bucket_carry(BACKFILL_SPECS, [q(key)]))
     )
     # equi-join on (key, bucket): AQE broadcasts the carry frame when it
     # fits; at extreme key cardinality it falls back to a shuffle join on
     # the SAME (key, bucket) axis the window needs anyway
-    joined = tagged.join(carry, [key, "__ob"])
-    cum = (
-        Window.partitionBy(key, "__ob")
-        .orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    inner = tagged.join(carry, [key, "__ob"]).selectExpr(
+        "*", *bucket_running(BACKFILL_SPECS, over([q(key), "__ob"], q(order)))
     )
-    tlc_total = F.count(text_len).over(cum) + F.col("__c_tlc")
-    tls_total = F.coalesce(F.sum(text_len.cast("long")).over(cum), F.lit(0)) + F.col("__c_tls")
-    state = joined.select(
-        "*",
-        text_len.alias("text_len"),
-        (F.count(F.lit(1)).over(cum).cast("long") + F.col("__c_turns")).alias("turns_so_far"),
-        (
-            F.sum(F.col("tool").isNotNull().cast("long")).over(cum) + F.col("__c_tool")
-        ).alias("tool_calls_so_far"),
-        F.when(tlc_total > 0, tls_total).alias("text_len_sum"),
-        F.when(tlc_total > 0, tls_total / tlc_total).alias("text_len_avg"),
-        F.greatest(F.max(text_len).over(cum), F.col("__c_tlm")).alias("text_len_max"),
-        (
-            F.sum((F.col("role") == "user").cast("long")).over(cum) + F.col("__c_user")
-        ).alias("user_turns_so_far"),
-        (
-            F.sum((F.col("role") == "assistant").cast("long")).over(cum) + F.col("__c_asst")
-        ).alias("assistant_turns_so_far"),
+    out = inner.selectExpr(
+        *map(q, df.columns), f"{_TEXT_LEN} AS text_len", *bucket_combine(BACKFILL_SPECS)
     )
-    feature_cols = [
-        "text_len", "turns_so_far", "tool_calls_so_far", "text_len_sum",
-        "text_len_avg", "text_len_max", "user_turns_so_far", "assistant_turns_so_far",
-    ]
-    out = state.select(*df.columns, *feature_cols)
-    return out.withColumn(
-        "tool_call_rate", F.col("tool_calls_so_far") / F.col("turns_so_far")
-    )
+    return out.selectExpr("*", TOOL_CALL_RATE)

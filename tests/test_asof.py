@@ -1,5 +1,5 @@
 """As-of join semantics: reference parity (J2 interval windows,
-operations/api.py:518-571), tie handling, tolerance, strategies, leakage."""
+operations/api.py:518-571), tie handling, tolerance, probe pushdown, leakage."""
 
 from __future__ import annotations
 
@@ -140,20 +140,6 @@ class TestAllInWindow:
         )
         got = sorted((r["probe_id"], r["val"]) for r in out.collect())
         assert got == [("p1", "r_a5"), ("p1", "r_a5b"), ("p2", "r_a5"), ("p2", "r_a5b")]
-
-
-class TestMergeAsofStrategy:
-    def test_matches_union_window(self, tiny):
-        left, right = tiny
-        a = asof_join(left, right, on="conv_id", left_ts="query_ts", right_ts="ts",
-                      direction="backward", tolerance="30 MINUTE",
-                      right_cols=["val"], strategy="union_window")
-        b = asof_join(left, right, on="conv_id", left_ts="query_ts", right_ts="ts",
-                      direction="backward", tolerance="30 MINUTE",
-                      right_cols=["val"], strategy="merge_asof")
-        ka = {r["probe_id"]: (r["matched_ts"], r["val"]) for r in a.collect()}
-        kb = {r["probe_id"]: (r["matched_ts"], r["val"]) for r in b.collect()}
-        assert ka == kb
 
 
 class TestProbePushdown:

@@ -20,6 +20,7 @@ from kgfarm_spark.functions.cleaning import (
 )
 from kgfarm_spark.functions.selection import (
     anova_f_scores,
+    mutual_information_binned,
     pearson_corr_matrix,
     prune_correlated,
 )
@@ -164,6 +165,22 @@ def test_corr_prune_keeps_higher_scored(spark):
     assert corr[("a", "b")] > 0.99
     kept = prune_correlated({"a": 2.0, "b": 1.0, "c": 0.5}, corr)
     assert kept == ["a", "c"]
+
+
+def test_mutual_information_binned_skips_null_features(spark):
+    """A NULL feature value has no bin: it must not land in the top bin,
+    and MI is estimated over the rows where the feature is observed."""
+    rows = [(float(x), y) for x in (0, 1) for y in (0, 1) for _ in range(5)]
+    rows += [(None, 1)] * 10
+    indep = spark.createDataFrame(rows, "x double, y int")
+    rows = [(0.0, 0)] * 10 + [(1.0, 1)] * 10 + [(None, 1)] * 10
+    informative = spark.createDataFrame(rows, "x double, y int")
+    assert mutual_information_binned(indep, ["x"], "y", bins=2)["x"] == pytest.approx(
+        0.0, abs=1e-12
+    )
+    assert mutual_information_binned(informative, ["x"], "y", bins=2)["x"] == pytest.approx(
+        math.log(2)
+    )
 
 
 def test_quantile_transformer_fit_apply_leakfree(spark):

@@ -223,7 +223,7 @@ def test_fused_hot_guard_auto_mode(spark):
     """VERDICT r03 next-step #7: hot_conv_turns='auto' engages the guard
     iff some conversation holds more than ~1/n_cores of the rows (the
     measured crossover, BENCH.md §2c) — no hand-tuning."""
-    from kgfarm_spark.operators.backfill import _auto_hot_threshold
+    from kgfarm_spark.operators.carry import _auto_hot_threshold
 
     hot_t = gen_transcripts(spark, n_turns=20_000, n_convs=20, seed=31, skew=3.0)
     uni_t = gen_transcripts(spark, n_turns=2_000, n_convs=100, seed=31, skew=1.0)
@@ -263,7 +263,7 @@ def test_auto_hot_threshold_stays_off_on_moderate_skew(spark):
     so on MODERATE skew (largest conversation well under a core's share
     of rows) the guard must stay off — the plain window's parallelism
     already hides it and the guard's extra shuffles would be pure cost."""
-    from kgfarm_spark.operators.backfill import _auto_hot_threshold
+    from kgfarm_spark.operators.carry import _auto_hot_threshold
 
     mod_t = gen_transcripts(spark, n_turns=20_000, n_convs=200, seed=5, skew=1.5)
     from pyspark.sql import functions as F
@@ -348,10 +348,8 @@ def test_probe_heavy_skew_engages_guard_and_stays_exact(spark):
     task — and the guarded output must equal the plain path exactly."""
     from pyspark.sql import functions as F
 
-    from kgfarm_spark.operators.backfill import (
-        _auto_hot_threshold,
-        backfill_asof_fused,
-    )
+    from kgfarm_spark.operators.backfill import backfill_asof_fused
+    from kgfarm_spark.operators.carry import _auto_hot_threshold
 
     turns = spark.createDataFrame(
         [(f"c{i % 20}", i, f"t {i}", "user", None)
